@@ -161,16 +161,15 @@ def robustness_sweep(
     kinds: tuple[str, ...] = ("packet_loss", "missing_variables"),
     severities: tuple[float, ...] = (0.0, 0.1, 0.2, 0.3, 0.4, 0.5, 0.6),
     n_repeats: int = 5,
-    base_seed: int = 42,
 ) -> list[dict]:
     """Pipeline-3 robustness harness (pipeline_tests_power.py:255-364):
-    degrade → re-evaluate per (kind, severity, repeat); aggregate with A8
-    downstream. ``evaluate_fn(degraded_df) -> dict`` plugs in the model."""
+    degrade → re-evaluate per (kind, severity, repeat), seeds from 42;
+    aggregate with A8 downstream. ``evaluate_fn(degraded_df) -> dict`` plugs in the model."""
     from cicevse2024_tfm_datapipeline_spark.operators.degrade import severity_sweep
 
     out = []
     for kind, sev, rep, degraded in severity_sweep(
-        windows, matrix_col, window_id_col, kinds, severities, n_repeats, base_seed
+        windows, matrix_col, window_id_col, kinds, severities, n_repeats, 42
     ):
         metrics = evaluate_fn(degraded)
         out.append({"kind": kind, "severity": sev, "repeat": rep, **metrics})

@@ -61,13 +61,10 @@ def safe_double(c: Column | str) -> Column:
     return (F.col(c) if isinstance(c, str) else c).try_cast("double")
 
 
-def charging_flag_expr(state: Column | str, charging_value: str = "charging", case_insensitive: bool = False) -> Column:
-    """F3: state_bin 0/1 flag (func_preproc.py:134; ci variant :583)."""
+def charging_flag_expr(state: Column | str) -> Column:
+    """F3: state_bin 0/1 flag (func_preproc.py:134)."""
     col = F.col(state) if isinstance(state, str) else state
-    if case_insensitive:
-        col = F.lower(F.trim(col))
-        charging_value = charging_value.lower()
-    return (col == F.lit(charging_value)).cast("int")
+    return (col == F.lit("charging")).cast("int")
 
 
 def binary_label_expr(attack: Column | str, benign_like: tuple[str, ...] = BENIGN_LIKE) -> Column:
@@ -90,16 +87,6 @@ def attack_group_expr(attack: Column | str, groups: dict[str, tuple[str, ...]] =
         expr = F.when(cond, F.lit(group)) if expr is None else expr.when(cond, F.lit(group))
     assert expr is not None
     return expr.otherwise(raw)
-
-
-def clip_expr(c: Column | str, lo: float | None = None, hi: float | None = None) -> Column:
-    """F13: clip/cap (class-weight cap, probability clip)."""
-    col = F.col(c) if isinstance(c, str) else c
-    if lo is not None:
-        col = F.greatest(col, F.lit(lo))
-    if hi is not None:
-        col = F.least(col, F.lit(hi))
-    return col
 
 
 def proba_pair_expr(p: Column | str) -> Column:

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from cicevse2024_tfm_datapipeline_spark.functions.scalars import BENIGN_LIKE, norm_str
 from cicevse2024_tfm_datapipeline_spark.operators.degrade import permute_feature_globally
-from cicevse2024_tfm_datapipeline_spark.operators.metrics import weighted_log_loss
 from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
 
 
@@ -25,20 +24,19 @@ def permutation_importance(
     feature_cols: Sequence[str],
     loss_fn: Callable[[DataFrame], float],
     n_repeats: int = 3,
-    base_seed: int = 42,
-    tiebreak_col: str = "event_id",
 ) -> list[dict]:
     """M7: for each feature, permute it globally (R5) ``n_repeats`` times
     and record the loss increase over baseline. Seeds derive as
-    base+1000·i+r (reference derivation). Returns ranked records
+    42+1000·i+r (reference derivation); ties in the permutation order
+    break on ``event_id``. Returns ranked records
     [{feature, mean_drop, std_drop}] sorted by mean_drop desc."""
     baseline = loss_fn(df)
     results = []
     for i, feat in enumerate(feature_cols):
         drops = []
         for r in range(n_repeats):
-            seed = base_seed + 1000 * i + r
-            permuted = permute_feature_globally(df, feat, seed, tiebreak_col)
+            seed = 42 + 1000 * i + r
+            permuted = permute_feature_globally(df, feat, seed, "event_id")
             drops.append(loss_fn(permuted) - baseline)
         n = len(drops)
         mean = sum(drops) / n
@@ -47,15 +45,11 @@ def permutation_importance(
     return sorted(results, key=lambda r: -r["mean_drop"])
 
 
-def log_loss_of(df: DataFrame, weight_col: str, p_true_col: str) -> float:
-    return weighted_log_loss(df, weight_col, p_true_col).collect()[0]["weighted_log_loss"]
-
-
-def attack_candidates(df: DataFrame, attack_col: str = "attack") -> list[str]:
-    """Non-benign attack names, sorted (reference
+def attack_candidates(df: DataFrame) -> list[str]:
+    """Non-benign ``attack`` names, sorted (reference
     _get_attack_candidates_from_df, func_preproc.py:445-455)."""
     rows = (
-        df.select(F.col(attack_col).alias("a"))
+        df.select(F.col("attack").alias("a"))
         .na.drop()
         .filter(~norm_str(F.col("a")).isin(*BENIGN_LIKE))
         .distinct()
@@ -68,21 +62,19 @@ def attack_candidates(df: DataFrame, attack_col: str = "attack") -> list[str]:
 def leave_one_attack_out(
     df: DataFrame,
     evaluate_fn: Callable[[DataFrame, DataFrame, str], dict],
-    attack_col: str = "attack",
-    state_col: str = "state",
-    time_col: str = "ts",
-    tiebreak_col: str = "event_id",
     max_attacks: int | None = None,
 ) -> list[dict]:
     """M9: per held-out attack — remove it from train/val (anti-filter
     P10/J3), keep it in test, re-split chronologically, hand both frames
     to ``evaluate_fn(train_val, test, held_out)``. The reference re-trains
-    a model here; the harness stays model-agnostic."""
+    a model here; the harness stays model-agnostic. The frame carries the
+    events columns: ``attack``, ``state``, time ``ts``, tie-break
+    ``event_id``."""
     out = []
-    for name in attack_candidates(df, attack_col)[: max_attacks or None]:
-        tagged = chrono_split(df, [attack_col, state_col], time_col, tiebreak_col)
+    for name in attack_candidates(df)[: max_attacks or None]:
+        tagged = chrono_split(df, ["attack", "state"], "ts", "event_id")
         train_val = tagged.filter(
-            (F.col("split") != "test") & (F.col(attack_col) != name)
+            (F.col("split") != "test") & (F.col("attack") != name)
         )
         test = tagged.filter(F.col("split") == "test")
         metrics = evaluate_fn(train_val, test, name)

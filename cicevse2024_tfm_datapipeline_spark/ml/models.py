@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble_features(df: DataFrame, feature_cols: Sequence[str], out_col: str = "features") -> DataFrame:
+def assemble_features(df: DataFrame, feature_cols: Sequence[str]) -> DataFrame:
     from pyspark.ml.feature import VectorAssembler
 
-    return VectorAssembler(inputCols=list(feature_cols), outputCol=out_col, handleInvalid="skip").transform(df)
+    return VectorAssembler(inputCols=list(feature_cols), outputCol="features", handleInvalid="skip").transform(df)
 
 
 def fit_surrogate_tree(
@@ -94,9 +94,7 @@ def fit_gradient_boosting(df: DataFrame, feature_cols: Sequence[str], label_col:
         return gbt.fit(assemble_features(df, feature_cols))
 
 
-def predict_udf(
-    predict_fn: Callable, feature_cols: Sequence[str], output_type: str = "double"
-):
+def predict_udf(predict_fn: Callable, feature_cols: Sequence[str]):
     """M6: batch-inference Pandas UDF around an arbitrary model's
     ``predict_fn(X: ndarray) -> ndarray`` (the reference's closure,
     pipeline_tests_power.py:205-240). Arrow-batched; the model object is
@@ -114,7 +112,7 @@ def predict_udf(
         return pd.Series(predict_fn(X))
 
     _infer.__annotations__ = {"features": pd.DataFrame, "return": pd.Series}
-    infer = F.pandas_udf(_infer, output_type)
+    infer = F.pandas_udf(_infer, "double")
 
     def apply(df: DataFrame, out_col: str = "prediction") -> DataFrame:
         return df.withColumn(out_col, infer(F.struct(*[F.col(c) for c in cols])))

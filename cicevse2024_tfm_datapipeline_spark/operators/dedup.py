@@ -47,15 +47,15 @@ def _slice_taker(start: int, length: int):
     return lambda h: F.substring(h, start, length)
 
 
-def minhash_signature_exprs(hashed: Column, num_hashes: int, slice_len: int = 8) -> list[Column]:
+def minhash_signature_exprs(hashed: Column, num_hashes: int) -> list[Column]:
     """MinHash signatures from a pre-hashed shingle array: signature i is
-    the min over shingles of the i-th ``slice_len``-hex-char slice of the
+    the min over shingles of the i-th 8-hex-char slice of the
     per-shingle digest. Distinct bit-ranges of a strong hash act as
     independent hash functions — ONE digest evaluation feeds all seeds
     (8× fewer md5 calls than seeded re-hashing). Empty set → null."""
     sigs = []
     for i in range(num_hashes):
-        sliced = F.transform(hashed, _slice_taker(i * slice_len + 1, slice_len))
+        sliced = F.transform(hashed, _slice_taker(i * 8 + 1, 8))
         sigs.append(F.array_min(sliced).alias(f"mh_{i}"))
     return sigs
 
@@ -221,7 +221,6 @@ def connected_components(
     edges: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components over an undirected candidate-pair edge set by
     Pregel-style min-label propagation: each round every vertex takes the
@@ -237,9 +236,10 @@ def connected_components(
     Scale shape: each round is ONE shuffle join of the edge frame with
     the |V|-sized label frame on vertex id (uniform keys) plus a
     min-groupBy — no driver-side graph, no n² anything. Rounds needed =
-    graph diameter; near-dup graphs are bundles of tight quasi-cliques
-    (diameter 2-4 in practice). ``localCheckpoint`` truncates the
-    per-round lineage so plan depth stays O(1) instead of O(rounds);
+    graph diameter (capped at 50); near-dup graphs are bundles of tight
+    quasi-cliques (diameter 2-4 in practice). ``localCheckpoint``
+    truncates the per-round lineage so plan depth stays O(1) instead of
+    O(rounds);
     the fixpoint test is a LIMIT-1 count on the changed-label frame,
     not a full materialization.
 
@@ -273,7 +273,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
+    for _ in range(50):
         nbr = sym.join(labels, sym["dst"] == labels["node"]).select(
             F.col("src").alias("node"), F.col("lbl")
         )
@@ -296,13 +296,11 @@ def fuzzy_dedup_survivors(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
 ) -> DataFrame:
-    """End-to-end fuzzy dedup: LSH candidate pairs → connected
-    components → keep one survivor per cluster (the min-id member, i.e.
-    the row whose component label equals its own id) plus every
-    untouched singleton.
+    """End-to-end fuzzy dedup: LSH candidate pairs (``doc_a``,
+    ``doc_b``) → connected components → keep one survivor per cluster
+    (the min-id member, i.e. the row whose component label equals its own
+    id) plus every untouched singleton.
 
     The removed set is ``components where node != label`` — bounded by
     the number of duplicate members (millions at 100 TB, not billions),
@@ -311,7 +309,7 @@ def fuzzy_dedup_survivors(
     Transitive near-dup survivor selection has no reference twin —
     scale extension.
     """
-    comp = connected_components(pairs, a_col, b_col)
+    comp = connected_components(pairs)
     removed = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -87,6 +87,11 @@ def degrade_windows(
             degraded = []
             append = degraded.append
             for wid, mat in zip(pdf[window_id_col], pdf[matrix_col]):
+                if not len(mat):
+                    # np.stack raises on zero rows; an empty window
+                    # degrades to an empty window
+                    append([])
+                    continue
                 # np.stack / ndarray.tolist are the single-call forms of
                 # the former per-row list comprehensions — identical
                 # values (r12; the per-window seeded Generator stream is

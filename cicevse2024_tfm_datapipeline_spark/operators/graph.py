@@ -25,11 +25,11 @@ from pyspark.sql import functions as F
 __all__ = ["undirect", "pagerank_fixed", "triangle_count", "bfs_levels"]
 
 
-def undirect(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
-    """(a, b) pairs → symmetric (src, dst) edge frame, self-loops and
-    duplicates removed."""
-    fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    rev = pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+def undirect(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) pairs → symmetric (src, dst) edge frame, self-loops
+    and duplicates removed."""
+    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EPS = 1e-12  # reference smoothing (func_aux/func_test.py:356-360)
+Z95 = 1.96  # two-sided 95% normal quantile of the FPR interval
 
 
 def confusion_matrix(
@@ -43,9 +44,7 @@ def confusion_matrix(
     )
 
 
-def binary_confusion_rates(
-    df: DataFrame, y_true: str, y_pred: str, z: float = 1.96
-) -> DataFrame:
+def binary_confusion_rates(df: DataFrame, y_true: str, y_pred: str) -> DataFrame:
     """A12: TN/FP/FN/TP cells + threshold rates + normal-approx FPR CI
     (func_aux/func_test.py:334-373). One aggregation pass."""
     yt, yp = F.col(y_true), F.col(y_pred)
@@ -73,8 +72,8 @@ def binary_confusion_rates(
         tpr.alias("recall"),
         tnr.alias("tnr"),
         balanced.alias("balanced_accuracy"),
-        F.when(n_neg > 0, F.greatest(F.lit(0.0), fpr - F.lit(z) * se)).alias("fpr_ci_low_norm"),
-        F.when(n_neg > 0, F.least(F.lit(1.0), fpr + F.lit(z) * se)).alias("fpr_ci_high_norm"),
+        F.when(n_neg > 0, F.greatest(F.lit(0.0), fpr - F.lit(Z95) * se)).alias("fpr_ci_low_norm"),
+        F.when(n_neg > 0, F.least(F.lit(1.0), fpr + F.lit(Z95) * se)).alias("fpr_ci_high_norm"),
     )
 
 
@@ -457,12 +456,6 @@ def mean_std_over_runs(df: DataFrame, key_cols: list[str], value: str) -> DataFr
         .otherwise(F.lit(0.0))
         .alias(f"{value}_std"),
     )
-
-
-def fph_from_fpr(fpr_col, window_hop_seconds: float):
-    """A15: FPR → false-positives-per-hour conversion factor
-    (func_aux/func_test.py:377-403)."""
-    return fpr_col * F.lit(3600.0 / window_hop_seconds)
 
 
 # --- A14: exact Clopper-Pearson CI (scalar numerics) --------------------

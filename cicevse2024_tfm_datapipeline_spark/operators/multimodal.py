@@ -30,18 +30,21 @@ MEDIA_SCHEMA = (
     "duration_ms int"
 )
 
+#: byte-histogram width of ``extract_features``
+_N_FEATURE_BINS = 16
+
 FEATURE_SCHEMA = (
     "media_id long, media_type string, n_bytes long, content_hash string, "
     "byte_mean double, byte_entropy double, feature array<double>"
 )
 
 
-def documents_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: treat document text bytes as an opaque media payload with
     typed metadata — exercises the binary-column path end to end."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.lit("text/plain").alias("media_type"),
         F.lit(None).cast("int").alias("width"),
         F.lit(None).cast("int").alias("height"),
@@ -155,11 +158,7 @@ def decode_payload(payload: bytes, media_type: str) -> np.ndarray:
     )
 
 
-# backwards-compatible alias (the pre-codec name)
-_decode_stub = decode_payload
-
-
-def extract_features(media: DataFrame, n_feature_bins: int = 16) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode → feature-extract over Arrow batches. Features here are a
     deterministic stand-in (byte histogram + entropy); a real pipeline
     would emit CNN embeddings / mel spectrogram stats with the SAME
@@ -172,7 +171,7 @@ def extract_features(media: DataFrame, n_feature_bins: int = 16) -> DataFrame:
             for _, r in pdf.iterrows():
                 payload = bytes(r["payload"])
                 arr = decode_payload(payload, r["media_type"])
-                hist = np.bincount(arr % n_feature_bins, minlength=n_feature_bins).astype(float)
+                hist = np.bincount(arr % _N_FEATURE_BINS, minlength=_N_FEATURE_BINS).astype(float)
                 p = hist / max(1.0, hist.sum())
                 nz = p[p > 0]
                 entropy = float(-(nz * np.log2(nz)).sum())
@@ -192,7 +191,7 @@ def extract_features(media: DataFrame, n_feature_bins: int = 16) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-def synthetic_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_media(docs: DataFrame) -> DataFrame:
     """Deterministic WAV/BMP payload generator over an id column — even
     ids become a PCM16 sine tone (frequency/length keyed on the id), odd
     ids a gradient BMP. Built per Arrow batch executor-side (payloads are
@@ -202,7 +201,7 @@ def synthetic_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for i in pdf[id_col].tolist():
+            for i in pdf["doc_id"].tolist():
                 i = int(i)
                 if i % 2 == 0:
                     rate = 8000
@@ -243,19 +242,7 @@ def synthetic_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    return docs.select(id_col).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: expand each payload row into frame
-    timestamps (decode stubbed — emits the sampling plan, which is the
-    Spark-side part: one row per frame to extract, partitioned by media)."""
-    n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / F.lit(every_ms)).cast("int")
-    return media.select(
-        "media_id",
-        "media_type",
-        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))).alias("frame_idx"),
-    ).withColumn("frame_ts_ms", F.col("frame_idx") * F.lit(every_ms))
+    return docs.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def resize_nearest(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -323,7 +310,7 @@ def ahash_bits(pixels: np.ndarray, grid: int = 8) -> int:
     return int(val.astype(np.int64))  # two's complement into a Spark long
 
 
-def image_ahash(media: DataFrame, grid: int = 8) -> DataFrame:
+def image_ahash(media: DataFrame) -> DataFrame:
     """aHash per BMP payload (Arrow-batched mapInPandas): the image twin
     of text MinHash — downstream exact-dedup is a groupBy on the hash,
     near-dup a Hamming-ball bucket join, both plain relational algebra
@@ -339,7 +326,7 @@ def image_ahash(media: DataFrame, grid: int = 8) -> DataFrame:
                 rows.append(
                     {
                         "media_id": int(r["media_id"]),
-                        "ahash": ahash_bits(px, grid),
+                        "ahash": ahash_bits(px),
                         "width": int(px.shape[1]),
                         "height": int(px.shape[0]),
                     }

@@ -5,8 +5,8 @@ null-ratio loop (pipeline_trainingmodels_network.py:390-410) — O(cols)
 passes in pandas. Here it is ONE aggregation job over all columns
 (SURVEY §7.4 risk 7): every countDistinct + null-fraction computed in a
 single shuffle-free scan; the decision is driver-side on a 1-row result.
-At 100 TB use approx_distinct=True — constant detection only needs
-"is it > 1", which approx_count_distinct answers exactly as reliably.
+At 100 TB approx_count_distinct could replace countDistinct — constant
+detection only needs "is it > 1", which it answers exactly as reliably.
 """
 
 from __future__ import annotations
@@ -17,13 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def column_profile(df: DataFrame, cols: Sequence[str] | None = None, approx_distinct: bool = False) -> dict[str, dict]:
+def column_profile(df: DataFrame, cols: Sequence[str] | None = None) -> dict[str, dict]:
     """{col: {n_distinct, null_frac}} from one scan."""
     cols = list(cols or df.columns)
-    nd = F.approx_count_distinct if approx_distinct else F.countDistinct
     aggs = []
     for c in cols:
-        aggs.append(nd(F.col(c)).alias(f"{c}__nd"))
+        aggs.append(F.countDistinct(F.col(c)).alias(f"{c}__nd"))
         aggs.append(F.avg(F.col(c).isNull().cast("double")).alias(f"{c}__nf"))
         aggs.append(F.count(F.lit(1)).alias(f"{c}__n"))
     row = df.agg(*aggs).collect()[0]
@@ -45,9 +44,9 @@ def drop_constant_columns(df: DataFrame, cols: Sequence[str] | None = None) -> D
     return df.drop(*drop)
 
 
-def drop_high_null_columns(df: DataFrame, threshold: float = 0.95, cols: Sequence[str] | None = None) -> DataFrame:
+def drop_high_null_columns(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """P6: drop columns with null ratio > threshold."""
-    profile = column_profile(df, cols)
+    profile = column_profile(df)
     drop = [c for c, p in profile.items() if p["null_frac"] > threshold]
     return df.drop(*drop)
 
@@ -68,6 +67,6 @@ DEFAULT_BLOCKLIST_PATTERNS = (
 )
 
 
-def drop_blocklisted(df: DataFrame, patterns: Sequence[str] = DEFAULT_BLOCKLIST_PATTERNS) -> DataFrame:
-    drop = [c for c in df.columns if any(p in c.lower() for p in patterns)]
+def drop_blocklisted(df: DataFrame) -> DataFrame:
+    drop = [c for c in df.columns if any(p in c.lower() for p in DEFAULT_BLOCKLIST_PATTERNS)]
     return df.drop(*drop)

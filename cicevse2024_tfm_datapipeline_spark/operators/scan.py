@@ -639,11 +639,10 @@ def global_ntile(
     order_cols: Sequence[str],
     n_tiles: int,
     out_col: str = "tile",
-    descending: bool = False,
     bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
-    """``NTILE(n) OVER (ORDER BY ...)`` with no unpartitioned window:
+    """``NTILE(n) OVER (ORDER BY ... ASC)`` with no unpartitioned window:
     exact SQL NTILE semantics (the first ``total % n`` tiles get the
     extra row) derived arithmetically from the two-phase global row
     number and the grand total — one range shuffle, same as any other
@@ -655,7 +654,6 @@ def global_ntile(
         df.withColumn("__one", F.lit(1)),
         order_cols,
         ["__one"],
-        descending,
         with_totals=True,
         bucketing=bucketing,
         fixed_bounds=fixed_bounds,

@@ -380,27 +380,21 @@ def mark_episodes(
     order_cols: Sequence[str],
     y_true_col: str,
     episode_id_col: str | None = None,
-    partition_cols: Sequence[str] = (),
     out_col: str = "episode",
     bucketing: str = "pinned",
 ) -> DataFrame:
     """Assign a dense episode number to every attack row (y=1); benign rows
     get null. Episode boundaries: start of a y=1 run, or episode-id change
-    inside a run. Without ``partition_cols`` the global order is scanned
-    with the two-phase prefix sum (no unpartitioned window).
+    inside a run. The global order is scanned with the two-phase prefix
+    sum (no unpartitioned window).
 
     ``bucketing='bounds'`` requires ``order_cols`` to uniquely key ``df``
     (the lineage-free path has no pin, so recomputation across consumers
     is only bit-stable for a tie-free ordering — see
     ``_global_ttd_episodes``); pass ``bucketing='pinned'`` otherwise."""
-    if partition_cols:
-        marked = _partitioned_islands(
-            df, order_cols, y_true_col, episode_id_col, partition_cols
-        )
-    else:
-        marked = _global_islands(
-            df, order_cols, y_true_col, episode_id_col, bucketing=bucketing
-        )
+    marked = _global_islands(
+        df, order_cols, y_true_col, episode_id_col, bucketing=bucketing
+    )
     # internal island column → caller's out_col (replacing any existing
     # column of that name, matching the old withColumn semantics)
     cols = [c for c in marked.columns if c not in ("__idx", "__island", out_col)]

@@ -42,10 +42,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def sign_bucket_expr(a: Column, n_dims: int = 8) -> Column:
     """Coarse quantizer: bucket = Σ (a[i] ≥ 0) << i over leading dims —
     axis-aligned random-hyperplane LSH (embeddings are already random
@@ -187,12 +183,12 @@ def fixed_centroid_rows(
     ]
 
 
-def fixed_centroids(spark, n_cells: int, dim: int, tag: str = "ivfc") -> DataFrame:
+def fixed_centroids(spark, n_cells: int, dim: int) -> DataFrame:
     """DataFrame view of :func:`fixed_centroid_rows` (JVM literal relation
     — no Python-RDD path, no md5 expressions to re-evaluate per use)."""
     return literal_df(
         spark,
-        fixed_centroid_rows(n_cells, dim, tag),
+        fixed_centroid_rows(n_cells, dim),
         schema="cell int, centroid array<double>",
     )
 
@@ -242,7 +238,6 @@ def ivf_topk(
     seed: int = 7,
     centroids: DataFrame | None = None,
     centroid_rows: list[tuple[int, list[float]]] | None = None,
-    fit_frac: float | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a coarse quantizer
     partitions the corpus into cells; each query probes its ``nprobe``
@@ -251,10 +246,8 @@ def ivf_topk(
     The 100-TB shape: the quantizer build is a ONE-TIME offline step —
     pass ``centroids`` (cell int, centroid array<double>) from a prior
     build (or :func:`fixed_centroids`) and NO ML fit runs in the query
-    path. When ``centroids`` is None a KMeans fit runs here, on a
-    deterministic md5-id-hash sample when ``fit_frac`` is set (an
-    iterative fit over the full corpus is the scale bottleneck; a coarse
-    quantizer only needs the distribution, not every row).
+    path. When ``centroids`` is None a KMeans fit runs here over the
+    full corpus.
 
     Cell assignment is a per-row fold over the broadcast centroid array
     (``array_min`` of (distance, cell) structs): no join blow-up, no
@@ -270,23 +263,6 @@ def ivf_topk(
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        fit_src = raw
-        if fit_frac is not None:
-            # deterministic id-hash sample: partitioning-independent,
-            # rerun-stable (same property as operators/sampling.py)
-            u = (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("neighbor_id").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                / F.lit(4294967296.0)
-            )
-            fit_src = raw.filter(u < F.lit(float(fit_frac)))
         # random init + bounded iterations: a coarse quantizer needs
         # balanced cells, not converged centroids
         model = KMeans(
@@ -295,7 +271,7 @@ def ivf_topk(
             featuresCol="__features",
             initMode="random",
             maxIter=8,
-        ).fit(fit_src.withColumn("__features", array_to_vector("cv")))
+        ).fit(raw.withColumn("__features", array_to_vector("cv")))
         cent_rows = [
             (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
         ]

@@ -50,15 +50,16 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     target = sc.defaultParallelism
     out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
     if len(_EMP_MEMO) >= _EMP_MEMO_MAX:
-        _EMP_MEMO.clear()
+        # evict the oldest entry (dicts keep insertion order)
+        del _EMP_MEMO[next(iter(_EMP_MEMO))]
     _EMP_MEMO[id(df)] = (df, out)
     return out
 
 
-def with_salt(df: DataFrame, n_salts: int, salt_col: str = "__salt") -> DataFrame:
-    """Uniform random salt 0..n_salts-1 (non-deterministic is fine: the
-    salt only routes rows; results are salt-invariant)."""
-    return df.withColumn(salt_col, (F.rand() * n_salts).cast("int"))
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
+    """Uniform random salt ``__salt`` in 0..n_salts-1 (non-deterministic is
+    fine: the salt only routes rows; results are salt-invariant)."""
+    return df.withColumn("__salt", (F.rand() * n_salts).cast("int"))
 
 
 def salted_sum_count(

@@ -48,7 +48,6 @@ def chrono_split(
     tiebreak_col: str,
     train_frac: float = 0.7,
     val_frac: float = 0.15,
-    split_col: str = "split",
 ) -> DataFrame:
     """Tag every row with its chronological split (W1 + W2 fused).
 
@@ -67,4 +66,4 @@ def chrono_split(
         .when(rn <= n_train + n_val, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    return df.withColumn(split_col, split)
+    return df.withColumn("split", split)

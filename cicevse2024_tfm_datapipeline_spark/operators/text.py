@@ -68,13 +68,11 @@ def langid_expr(tokens: Column, profiles: dict[str, tuple[str, ...]] = LANG_PROF
     return best["tag"]
 
 
-def punct_count_expr(text: Column | str) -> Column:
-    """Characters outside [A-Za-z0-9 ] — the punctuation mass."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.length(col) - F.length(F.regexp_replace(col, "[A-Za-z0-9 ]", ""))
+#: stopwords whose share feeds ``quality_score_expr``
+_QUALITY_STOPWORDS = ("the", "a", "of", "and")
 
 
-def quality_score_expr(text: Column, tokens: Column, stopwords: tuple[str, ...] = ("the", "a", "of", "and")) -> Column:
+def quality_score_expr(text: Column, tokens: Column) -> Column:
     """Composite quality score from length / punctuation / stopword ratios
     (the reference-style heuristic battery, fixed weights)."""
     n_chars = F.length(text)
@@ -82,7 +80,7 @@ def quality_score_expr(text: Column, tokens: Column, stopwords: tuple[str, ...] 
     punct = F.length(F.regexp_replace(text, "[A-Za-z0-9 ]", ""))
     punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))
     stop_ratio = F.when(
-        n_tokens > 0, hit_count_expr(tokens, stopwords) / n_tokens
+        n_tokens > 0, hit_count_expr(tokens, _QUALITY_STOPWORDS) / n_tokens
     ).otherwise(F.lit(0.0))
     len_score = F.least(F.lit(1.0), n_tokens / F.lit(100.0))
     return (
@@ -130,14 +128,14 @@ def pii_count_exprs(text: Column | str) -> dict[str, Column]:
     return {kind: F.regexp_count(col, F.lit(pat)) for kind, pat in PII_PATTERNS}
 
 
-def redact_pii_expr(text: Column | str, token: str = "<PII>") -> Column:
-    """Replace every PII match with ``token``, kinds applied in the fixed
+def redact_pii_expr(text: Column | str) -> Column:
+    """Replace every PII match with ``<PII>``, kinds applied in the fixed
     ``PII_PATTERNS`` order — the redaction pass an LLM corpus runs before
     training. Chained ``regexp_replace`` (replace-all in Spark; the
     DuckDB twin needs the 'g' flag)."""
     col = F.col(text) if isinstance(text, str) else text
     for _, pat in PII_PATTERNS:
-        col = F.regexp_replace(col, pat, token)
+        col = F.regexp_replace(col, pat, "<PII>")
     return col
 
 

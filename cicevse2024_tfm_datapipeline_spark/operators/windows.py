@@ -112,14 +112,12 @@ def sliding_windows(
     seq_len: int,
     step: int = 1,
     label_col: str | None = None,
-    episode_col: str | None = None,
-    collect_series: bool = True,
 ) -> DataFrame:
     """W3+W4: one row per window.
 
     Output: group cols, ``window_id`` (0-based, reference's ``start/step``),
-    per-feature ``<f>_seq`` arrays (ordered oldest→newest) when
-    ``collect_series``, plus the window-end label/episode columns.
+    per-feature ``<f>_seq`` arrays (ordered oldest→newest), plus the
+    window-end label column.
     """
     order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
     frame = order_win.rowsBetween(-(seq_len - 1), 0)
@@ -127,14 +125,11 @@ def sliding_windows(
     out = df.withColumn("__rn", F.row_number().over(order_win))
     cols: list[Column] = [F.col(c) for c in group_cols]
     cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
-    if collect_series:
-        for f in features:
-            out = out.withColumn(f"{f}_seq", F.collect_list(F.col(f)).over(frame))
-            cols.append(F.col(f"{f}_seq"))
+    for f in features:
+        out = out.withColumn(f"{f}_seq", F.collect_list(F.col(f)).over(frame))
+        cols.append(F.col(f"{f}_seq"))
     if label_col is not None:
         cols.append(F.col(label_col).alias("window_label"))
-    if episode_col is not None:
-        cols.append(F.col(episode_col).alias("window_episode"))
     is_end = (F.col("__rn") >= F.lit(seq_len)) & (
         ((F.col("__rn") - F.lit(seq_len)) % F.lit(step)) == 0
     )
@@ -250,11 +245,11 @@ def ewma_truncated(
     value_col: str,
     alpha: float,
     max_terms: int = 32,
-    out_col: str = "ewma",
 ) -> DataFrame:
-    """Per-key exponentially-weighted moving average, truncated to the
-    last ``max_terms`` observations (pandas ``ewm(adjust=False)``
-    semantics while the history fits the window; after that the oldest
+    """Per-key exponentially-weighted moving average (column ``ewma``),
+    truncated to the last ``max_terms`` observations (pandas
+    ``ewm(adjust=False)`` semantics while the history fits the window;
+    after that the oldest
     retained term carries the full head weight, so the truncation error
     is bounded by ``(1-alpha)^(max_terms-1)`` of the dropped mass —
     ~1e-5 at alpha 0.3, K 32).
@@ -285,6 +280,6 @@ def ewma_truncated(
     fold = f"aggregate({weighted}, cast(0.0 as double), (acc, x) -> acc + x)"
     return (
         df.withColumn("__ewma_arr", arr)
-        .withColumn(out_col, F.expr(fold))
+        .withColumn("ewma", F.expr(fold))
         .drop("__ewma_arr")
     )

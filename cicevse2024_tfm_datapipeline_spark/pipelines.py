@@ -36,8 +36,6 @@ from cicevse2024_tfm_datapipeline_spark.operators.windows import (
     window_summary_stats,
 )
 
-TASKS = ("binary", "scenario", "multiattack")
-
 
 @dataclass
 class PipelineConfig:
@@ -172,13 +170,16 @@ def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConf
     return artifact
 
 
+#: attacks the reference's host pipeline leaves out (DROP_ATTACKS)
+HOST_DROP_ATTACKS = ("serice-detection", "icmp-fragmentation_old")
+
+
 def run_host_pipeline(
     spark: SparkSession,
     host_df: DataFrame,
     importances: list[tuple[str, float]],
     cfg: PipelineConfig,
     top_k: int = 10,
-    drop_attacks: tuple[str, ...] = ("serice-detection", "icmp-fragmentation_old"),
 ) -> dict:
     """§3.2 host lifecycle: DROP_ATTACKS filter → W8 top-K feature
     selection from a precomputed importance ranking (the M7 cross-stage
@@ -186,7 +187,7 @@ def run_host_pipeline(
     shared split/scale/window/metric chain."""
     ranked = [f for f, _ in sorted(importances, key=lambda kv: -kv[1])]
     selected = [f for f in ranked if f in host_df.columns][:top_k]
-    df = host_df.filter(~F.col(cfg.attack_col).isin(*drop_attacks))
+    df = host_df.filter(~F.col(cfg.attack_col).isin(*HOST_DROP_ATTACKS))
     cfg2 = PipelineConfig(**{**cfg.__dict__, "num_features": tuple(selected)})
     return run_power_pipeline(spark, df, cfg2)
 

@@ -176,207 +176,6 @@ def rotation_window(
     return [*head, *list(anchors)]
 
 
-# r11 note (for the next window's _R11_CHANGED): no plan changes are
-# staged — round 10 left no deferred flip. Unless round 11 changes
-# plans, compute the window with: python tools/next_window.py --rounds
-# 10 (requires the driver-emitted CORRECTNESS_r10.json committed first).
-
-# r10 changed-plan re-drives (rule item 2):
-#   - the a13 quartet + a11_multiclass_auc: the threshold scans moved
-#     from quantile-bound to DOMAIN-LITERAL fixed bounds (operators/
-#     scan.py fixed_bounds; metrics_queries._SCORE_GRID/_OVR_SCORE_GRID)
-#     — the r09 verdict's watch-item fix (SCALE.md "A13 profile"); same
-#     results, different plan (no approxQuantile pre-pass).
-#   - sim_srp_lsh_pairs: SCHEMA CHANGED — the result now carries the
-#     audit_truth_pairs/audit_found_pairs/audit_recall recall contract
-#     (r09 verdict "Next round" #3), so a fresh row is mandatory.
-#   - w6_sessionize_ttd: flipped to the lineage-free bounds scan
-#     (sessionize bucketing="bounds" — its (ts, event_id) order key is
-#     measured tie-free; SCALE.md "Sessionize bounds flip").
-# r11 changed-plan re-drives (rule item 2):
-#   - a_wasserstein_drift: the r10 ADVICE overflow fix lifts the segment
-#     cross-products and the denominator to DECIMAL(38,0) BEFORE
-#     multiplying (wave42.py) — a real plan change (new Cast nodes).
-#   - sim_srp_lsh_pairs: body extracted to _srp_pairs(with_audit=...)
-#     for the contract A/B receipt (r10 verdict #3). The registered plan
-#     is byte-identical, but rule item 2 does not litigate that — a
-#     fresh row is cheaper than the argument.
-#   - w6_sessionize_ttd + the a13 quartet + a11_multiclass_auc: every
-#     registered consumer of scan.bounds_bucketed — its PID projection
-#     changed twice this round. (1) The r10 ADVICE NTZ-key fix is NOT
-#     dead code: events.ts loads as TIMESTAMP_NTZ, so w6's scan key now
-#     derives from calendar fields instead of a session-zone cast.
-#     (2) That heavier key exposed a latent cost — the key expression
-#     sat INSIDE the bounds filter lambda, re-evaluated per bound per
-#     row (no CSE in lambda bodies, no codegen around HOFs) — w6 probed
-#     3.64 s vs its 1.89 s r10 receipt; bounds_bucketed now materializes
-#     the key once per row (w6 back to 1.84 min-of-5). The a13/a11 tier
-#     shares the PID-projection shape via fixed_bounds, so their plans
-#     changed too. a11_ovr_auc_per_class stays out: bounded_curves=True
-#     routes it through the small-groups window branch, no global scan
-#     (same adjudication as r09/r10).
-# r11 OPTIMIZATION-round additions to the changed set (the round's
-# whole point is plan changes with unchanged results; every name below
-# was re-proven oracle-EXACT at sf0.001/0.01/0.1 before commit —
-# OPTIMIZATION_r11.md has the per-change evidence):
-#   - per-side norm precompute across the similarity family
-#     (operators/similarity.py + wave21/wave27/wave34): sim_bruteforce/
-#     bucketed/embedding_near_dup/ivf/hard_negatives/mips,
-#     dedup_semdedup_cells, ml_knn_classify, sim_ranking_metrics.
-#   - the MinHash signature-frame pin (operators/dedup.
-#     lsh_candidate_pairs) — every LSH-pair consumer's plan changed:
-#     dedup_minhash_lsh_pairs (anchor slot), dedup_lsh_components,
-#     dedup_fuzzy_survivors, pipeline_fuzzy_corpus, dedup_golden_record,
-#     dedup_edit_distance_verify, dedup_mutual_best_match,
-#     dedup_containment_pairs, g_pagerank_lsh, g_triangle_count_lsh,
-#     g_clustering_coefficient, g_adamic_adar, g_kcore_two_rounds,
-#     g_bfs_levels_lsh.
-#   - single-pass PSI binning (a_psi_drift), Q21 EXISTS→aggregations
-#     (tpch_q21_waiting_suppliers), window-count span hits
-#     (dedup_duplicate_spans), dimension-first Q7
-#     (j_tpch_q7_nation_volume), per-cents pre-aggregation
-#     (a_weighted_median), narrow-frame corpus prep
-#     (pipeline_corpus_prep), window-count TF-IDF (text_tfidf_topk),
-#     fold-in-scan classifier (text_quality_linear_classifier).
-# Window computed with: python tools/next_window.py --rounds 10
-# --changed <the full _R11_CHANGED list below, in this order>
-_R11_CHANGED = [
-    "a_wasserstein_drift",
-    "sim_srp_lsh_pairs",
-    "w6_sessionize_ttd",
-    "a13_threshold_at_fpr",
-    "a13_roc_curve_points",
-    "a13_roc_auc",
-    "a13_average_precision",
-    "a11_multiclass_auc",
-    "sim_bruteforce_cosine_topk",
-    "sim_bucketed_ann_topk",
-    "sim_embedding_near_dup",
-    "sim_ivf_topk",
-    "dedup_semdedup_cells",
-    "ml_knn_classify",
-    "sim_ranking_metrics",
-    "sim_hard_negatives",
-    "sim_mips_norm_reduction",
-    "dedup_minhash_lsh_pairs",
-    "dedup_lsh_components",
-    "dedup_fuzzy_survivors",
-    "pipeline_fuzzy_corpus",
-    "g_pagerank_lsh",
-    "g_triangle_count_lsh",
-    "dedup_edit_distance_verify",
-    "dedup_mutual_best_match",
-    "g_clustering_coefficient",
-    "dedup_containment_pairs",
-    "g_adamic_adar",
-    "dedup_golden_record",
-    "g_kcore_two_rounds",
-    "g_bfs_levels_lsh",
-    "a_psi_drift",
-    "tpch_q21_waiting_suppliers",
-    "dedup_duplicate_spans",
-    "j_tpch_q7_nation_volume",
-    "a_weighted_median",
-    "pipeline_corpus_prep",
-    "text_tfidf_topk",
-    "text_quality_linear_classifier",
-    "ml_gbm_two_stumps",
-    "text_textrank_keywords",
-]
-
-# Window computed with: python tools/next_window.py --rounds 9
-# --changed a13_threshold_at_fpr,a13_roc_curve_points,a13_roc_auc,
-# a13_average_precision,a11_multiclass_auc,sim_srp_lsh_pairs,
-# w6_sessionize_ttd
-_R10_CHANGED = [
-    "a13_threshold_at_fpr",
-    "a13_roc_curve_points",
-    "a13_roc_auc",
-    "a13_average_precision",
-    "a11_multiclass_auc",
-    "sim_srp_lsh_pairs",
-    "w6_sessionize_ttd",
-]
-
-# r09 changed-plan re-drives (rule item 2): round 9 executed the staged
-# r08 note — the ROC/cumsum tier now runs the lineage-free bounds-
-# bucketed scan (operators/metrics.py passes bucketing="bounds" to
-# global_cumsum/grouped_cumsum; operators/scan.py:bounds_bucketed, with
-# the r09 dtype guard). Changed plans: the a13_* quartet (via
-# _threshold_cum_counts) and a11_multiclass_auc (via ovr_auc_summary's
-# micro-side global scan). a11_ovr_auc_per_class is NOT in the list: its
-# registered plan uses bounded_curves=True -> the small_groups window
-# branch, untouched by the flip. Sessionize stays on the pinned range
-# exchange (SCALE.md tie-skew caveat: its order key has heavy ties).
-# Also changed: sim_srp_lsh_pairs — the r08 verdict asked the SRP ladder
-# to extend past w=16 (wave27.py); the new frozen stride-64 coefficient
-# layout moves band 1's hyperplanes, so its signatures (and candidate
-# set) changed SEMANTICALLY in both engines — a fresh row is mandatory.
-# Window computed with: python tools/next_window.py --rounds 8
-# --changed a13_threshold_at_fpr,a13_roc_curve_points,a13_roc_auc,
-# a13_average_precision,a11_multiclass_auc,sim_srp_lsh_pairs
-_R09_CHANGED = [
-    "a13_threshold_at_fpr",
-    "a13_roc_curve_points",
-    "a13_roc_auc",
-    "a13_average_precision",
-    "a11_multiclass_auc",
-    "sim_srp_lsh_pairs",
-]
-
-# r08 changed-plan re-drives (rule item 2), in priority order:
-#   - a_psi_drift: plan rewritten twice in r07 (array binning; multi-
-#     consumer pins) — its green row predates the rewrite (r07 verdict
-#     "What's wrong" #2 asks for exactly this re-drive).
-#   - sim_srp_lsh_pairs: SEMANTICS changed this round — scale-aware band
-#     width (integer occupancy ladder) replacing fixed 2x8-bit bands, the
-#     measured remedy to the sf1 sweep's one super-linear query.
-#   - the r06 wide-scan opt-in cohort whose driver rows predate that plan
-#     change (semantics unchanged, sweep-green — re-driven because rule
-#     item 2 does not litigate semantics): pipeline_corpus_prep,
-#     pipeline_fuzzy_corpus, dedup_duplicate_spans, dedup_containment_pairs,
-#     dedup_contamination_fraction, stream_lsh_collisions,
-#     dedup_source_overlap_matrix, ml_gbm_two_stumps,
-#     dedup_prefix_filter_jaccard, text_novelty_vs_train (the cohort
-#     members already re-driven in the r07 window — dedup_mutual_best_match,
-#     a_poisson_bootstrap_ci, dedup_minhash_lsh_pairs — need no slot).
-#   - text_tfidf_topk: named by the r07 verdict among the changed-plan
-#     re-drives (its row also predates r06).
-_R08_CHANGED = [
-    "a_psi_drift",
-    "sim_srp_lsh_pairs",
-    "pipeline_corpus_prep",
-    "pipeline_fuzzy_corpus",
-    "dedup_duplicate_spans",
-    "dedup_containment_pairs",
-    "dedup_contamination_fraction",
-    "stream_lsh_collisions",
-    "dedup_source_overlap_matrix",
-    "ml_gbm_two_stumps",
-    "dedup_prefix_filter_jaccard",
-    "text_novelty_vs_train",
-    "text_tfidf_topk",
-]
-
-# Round-9 window = rotation_window(...) materialized (the meta-test
-# recomputes and compares). The ledger closed in r08 (zero never-driven
-# names remain), so this is the first pure steady-state window:
-#   block 1 (0): never-driven — empty, ledger closed.
-#   block 2 (6): _R09_CHANGED re-drives (the bounds-scan flip + the
-#     SRP stride/ladder extension, above).
-#   block 3 (40): oldest-rows-first rotation — the r01 cohort head in
-#     registration order, including a_approx_sketches (its first drive
-#     against the full error-bound oracle added in r07 — the one ledger
-#     row whose evidence class was stale, r08 verdict "missing" #1).
-#   block 4 (4): anchors.
-# Round-10 window (executed; 50/50 green in CORRECTNESS_r10.json):
-#   block 1 (4): the wave42 registrations' first rows; block 2 (7):
-#   _R10_CHANGED (fixed-bounds a13/a11 tier, SRP recall contract,
-#   sessionize bounds flip); block 3 (35): oldest-rows-first; block 4:
-#   anchors.
-# Round-11 window = rotation_window(...) materialized (the meta-test
-# recomputes and compares). Round 11 is the FIRST OPTIMIZATION round, so
-# the changed-plan block dominates by design:
 # r12 OPTIMIZATION-round changed-plan declarations (rule item 2; every
 # name re-proven oracle-EXACT at sf0.001/0.01/0.1 before its commit —
 # OPTIMIZATION_r12.md has the per-change evidence):
@@ -453,6 +252,8 @@ _R12_CHANGED = [
     "ml_pca_power_iteration",
 ]
 
+# Round-12 window = rotation_window(...) materialized (the meta-test
+# recomputes and compares):
 #   block 1 (0): never-driven — empty; the wave43 pair landed their
 #     first rows in CORRECTNESS_r11 and the ledger is CLOSED again.
 #   block 2 (44 of the 45 _R12_CHANGED): every query whose plan (or
@@ -521,26 +322,6 @@ _PRIORITY = [
 # the rows-only evidence lives in the committed ROWSONLY_r0x.json
 # determinism artifacts instead of window slots.
 _ROWS_ONLY_WINDOW_OK = frozenset()
-
-# r08 planned window residue, committed in round 7 (kept for the ledger
-# meta-test; all 14 occupy block 1 of _PRIORITY above in registration
-# order — set-identical by tests/test_coverage_doc.py).
-_R08_PLAN = [
-    "g_adamic_adar",
-    "a_difference_in_differences",
-    "a_conformal_naive_coverage",
-    "a_spc_western_electric",
-    "a_markov_conditional_entropy",
-    "a_retention_half_life",
-    "a_burstiness_fano",
-    "text_distinctive_terms",
-    "a_benford_first_digit",
-    "f_quantile_normalize",
-    "a_key_skew_gini",
-    "a_referential_integrity",
-    "w_rolling_median",
-    "w_debounce_bursts",
-]
 
 
 def load_all() -> dict[str, Query]:

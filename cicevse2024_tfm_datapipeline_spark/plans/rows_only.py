@@ -29,17 +29,21 @@ from cicevse2024_tfm_datapipeline_spark.plans.registry import register
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
-def _windows_df(spark: SparkSession, sf_dir: str, seq_len: int = 4) -> DataFrame:
+#: window length T of ``_windows_df``
+_SEQ_LEN = 4
+
+
+def _windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window rows with an array<array<double>> matrix column (T × F=2)
     built from the power view — input to the degradation operators."""
     pv = power_view(spark, sf_dir)
     order_win = W.partitionBy("attack", "state").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    frame = order_win.rowsBetween(-(seq_len - 1), 0)
+    frame = order_win.rowsBetween(-(_SEQ_LEN - 1), 0)
     step_row = F.array(F.col("value"), (F.col("value") >= 100).cast("double"))
     out = (
         pv.withColumn("__rn", F.row_number().over(order_win))
         .withColumn("matrix", F.collect_list(step_row).over(frame))
-        .filter(F.col("__rn") >= seq_len)
+        .filter(F.col("__rn") >= _SEQ_LEN)
     )
     # unique deterministic window id = group_code·100000 + within-group rn.
     # The group code is a lexicographic rank over the DISTINCT (attack,
@@ -94,7 +98,7 @@ def _register_degrade(kind: str, severity: float) -> None:
         "(func_aux/func_test.py:548-574).",
         tags=("R", kind),
     )
-    def _q(spark: SparkSession, sf_dir: str, kind=kind, severity=severity) -> DataFrame:
+    def _q(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = _windows_df(spark, sf_dir)
         deg = degrade_windows(w, "matrix", "window_id", severity, kind, seed=42)
         return _degrade_summary(deg)

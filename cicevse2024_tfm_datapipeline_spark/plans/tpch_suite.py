@@ -37,7 +37,7 @@ def _scaled(col: Column, scale: int = 10000) -> Column:
 _REV = "CAST(floor(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)"
 
 
-def _rev(li: DataFrame = None) -> Column:
+def _rev() -> Column:
     return _scaled(F.col("l_extendedprice") * (1 - F.col("l_discount")))
 
 

@@ -261,10 +261,12 @@ def a_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = s.groupBy("v").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("is_a").alias("cnt_a")
     )
-    # r12: fixed-bounds scan over the footer-bracketed value grid (the
-    # weighted-median discipline) — no pinned range exchange, no sampler
-    # job, no checkpoint planning pass; grid values shift bucket balance
-    # only, never results
+    # r12: fixed-bounds scan over a grid spanning the footer min/max
+    # (the weighted-median discipline) — no pinned range exchange, no
+    # sampler job, no checkpoint planning pass. The grid is not an exact
+    # bracket of the keys: floor(value*10000 + 0.5) rounds, so the top key
+    # can land one tick past hi*10000 and falls into the last bucket. Grid
+    # values shift bucket balance only, never results
     from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
     from cicevse2024_tfm_datapipeline_spark.sources.readers import (
         table_column_minmax,

@@ -265,9 +265,6 @@ def j_feature_store_pit_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic k-means++ (D²-weighted) seeding
 # ---------------------------------------------------------------------------
 
-_KPP_ROUNDS = 3  # seeds picked after the md5-argmin start
-
-
 def _kpp_u_sql(vid: str, r: int) -> str:
     return (
         f"(('0x' || substr(md5('kpp{r}|' || CAST({vid} AS VARCHAR)), 1, 8))"
@@ -359,25 +356,26 @@ def ml_kmeanspp_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    def argopt(df: DataFrame, key_col: str, asc: bool, tie_col: str = "vec_id"):
+    def argopt(df: DataFrame, key_col: str, asc: bool):
         """Global arg-min/max with a deterministic tiebreak via scalar
-        aggregate + equality join (no unpartitioned window)."""
+        aggregate + equality join (no unpartitioned window); ties break
+        on ``vec_id``."""
         if asc:
-            best = df.agg(F.min(F.struct(F.col(key_col), F.col(tie_col))).alias("b"))
+            best = df.agg(F.min(F.struct(F.col(key_col), F.col("vec_id"))).alias("b"))
         else:
             best = df.agg(
-                F.max(F.struct(F.col(key_col), (-F.col(tie_col)).alias(tie_col))).alias(
+                F.max(F.struct(F.col(key_col), (-F.col("vec_id")).alias("vec_id"))).alias(
                     "b"
                 )
             )
         joined = df.crossJoin(F.broadcast(best))
         if asc:
             cond = (F.col(key_col) == F.col("b").getField(key_col)) & (
-                F.col(tie_col) == F.col("b").getField(tie_col)
+                F.col("vec_id") == F.col("b").getField("vec_id")
             )
         else:
             cond = (F.col(key_col) == F.col("b").getField(key_col)) & (
-                -F.col(tie_col) == F.col("b").getField(tie_col)
+                -F.col("vec_id") == F.col("b").getField("vec_id")
             )
         return joined.filter(cond).drop("b")
 

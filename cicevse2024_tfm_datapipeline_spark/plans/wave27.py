@@ -251,7 +251,7 @@ def f_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_BANDS = 2  # OR-construction band count (the recall knob; pinned at 2
 #               so the benched candidate volume stays comparable round
 #               over round — production raises it per the recall target,
-#               measured in tools/srp_width_probe.py)
+#               measured in SCALE.md round 8)
 _BAND_STRIDE = 64  # FROZEN coefficient layout: band b's plane j reads
 #               coefficient row b*_BAND_STRIDE + j forever. With the
 #               stride fixed at the signature type's practical bit cap
@@ -503,7 +503,7 @@ _NORM_SQL = """sqrt(list_reduce(list_transform(range(1, len({a}) + 1),
     "corpus outgrew the 2x256-key space (SCALE.md finding #1, the sf1 "
     "sweep's only super-linear query: 101x candidates for 10x vectors); "
     "the ladder re-sizes the key space with the corpus so candidates stay "
-    "~linear (tools/srp_width_probe.py measured the trade: width bounds "
+    "~linear (SCALE.md measures the trade: width bounds "
     "occupancy, band count buys recall back linearly — the registered "
     "query pins 2 bands, production raises it to hit a recall target). "
     "At 100 TB the same masking runs at the ladder's cap with more "
@@ -520,14 +520,6 @@ _NORM_SQL = """sqrt(list_reduce(list_transform(range(1, len({a}) + 1),
     tags=("similarity", "dedup", "lsh"),
 )
 def sim_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _srp_pairs(spark, sf_dir, with_audit=True)
-
-
-def _srp_pairs(spark: SparkSession, sf_dir: str, with_audit: bool = True) -> DataFrame:
-    """Body of sim_srp_lsh_pairs. ``with_audit=False`` builds the SAME
-    candidate/verify pipeline without the recall-contract audit columns —
-    ONLY for tools/srp_contract_ab.py's same-host A/B cost receipt (r10
-    verdict #3); every registered/oracled surface uses the audited plan."""
     emb = ensure_min_parallelism(t(spark, sf_dir, "embeddings"))
     vcol = as_double_array("embedding")
     # scale-aware width resolved at PLAN TIME from the parquet FOOTER row
@@ -625,11 +617,6 @@ def _srp_pairs(spark: SparkSession, sf_dir: str, with_audit: bool = True) -> Dat
         )
     )
     res = vf.filter(F.col("cosine") >= 0.35)
-    if not with_audit:
-        return res.select(
-            "id_a", "id_b", "hamming", "same_label",
-            pround("cosine", 6).alias("cosine"),
-        )
     # RECALL CONTRACT (round 10): measured recall vs the brute-force
     # ground truth over the audit slice (smaller id < _AUDIT_N) rides in
     # the hashed result — the sim_ivf_topk in_exact_topk pattern. The

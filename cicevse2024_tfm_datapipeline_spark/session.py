@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 _DEF_SHUFFLE_PARTITIONS = "32"
 
 
-def get_spark(app_name: str = "cicevse2024-tfm-spark", shuffle_partitions: str | None = None) -> SparkSession:
+def get_spark(app_name: str = "cicevse2024-tfm-spark") -> SparkSession:
     """Create (or fetch) the session.
 
     - AQE on: runtime coalescing + skew-join mitigation matter at 100 TB.
@@ -31,7 +31,7 @@ def get_spark(app_name: str = "cicevse2024-tfm-spark", shuffle_partitions: str |
         .config("spark.driver.bindAddress", "127.0.0.1")
         .config("spark.driver.host", "127.0.0.1")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS", _DEF_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", _DEF_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

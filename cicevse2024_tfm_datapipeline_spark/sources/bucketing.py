@@ -20,10 +20,9 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 64,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
-    """With ``path``, the table is external (bucket metadata still lives
+    """Buckets are sorted by ``bucket_col``. With ``path``, the table is external (bucket metadata still lives
     in the session catalog — buckets are a table property, not a
     parquet-file property); without it, it lands in the warehouse dir."""
     spark = df.sparkSession
@@ -40,15 +39,13 @@ def write_bucketed(
     else:
         target = urlparse(path).path or path
     shutil.rmtree(target, ignore_errors=True)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
 
 
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — verify with
+def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:
+    """Inner-join two same-bucketed tables on the bucket key — verify with
     .explain(): no Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")

@@ -69,18 +69,16 @@ def minmax_scaled_ints(
     df: DataFrame,
     cols: Sequence[str],
     bits: int,
-    bounds: dict[str, tuple[float, float]] | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """Scale each column to an integer in ``[0, 2^bits)`` by global
     min/max: ``least(2^bits − 1, floor(((x − mn) / (mx − mn)) · 2^bits))``
     (exactly this operation order — the oracle mirrors it). Constant
     columns and nulls map to 0. Bounds come from :func:`column_bounds`
-    (computed here when not passed) and are inlined as literals — the
+    and are inlined as literals — the
     scaling is per-row codegen arithmetic with no stats subplan. Adds
     ``__zi_<col>`` columns."""
     scale = (1 << bits) - 1
-    if bounds is None:
-        bounds = column_bounds(df, cols)
+    bounds = column_bounds(df, cols)
     out = df
     names = []
     for c in cols:

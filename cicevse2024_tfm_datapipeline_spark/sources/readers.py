@@ -295,15 +295,16 @@ def load_table(
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     df = _unstarve(spark, df, path) if wide else df
     if len(_TABLE_PLAN_CACHE) >= _TABLE_PLAN_CACHE_MAX:
-        _TABLE_PLAN_CACHE.clear()
+        # evict the oldest entry (dicts keep insertion order)
+        del _TABLE_PLAN_CACHE[next(iter(_TABLE_PLAN_CACHE))]
     _TABLE_PLAN_CACHE[key] = df
     return df
 
 
 # --- S1: power CSV scan (func_aux/func_preproc.py:128-136) -------------
 
-def scan_power_csv(spark: SparkSession, path: str, col_time: str = "time") -> DataFrame:
-    """CSV scan + timestamp parse + charging flag.
+def scan_power_csv(spark: SparkSession, path: str) -> DataFrame:
+    """CSV scan + ``time`` parse + charging flag.
 
     Reference sorts globally after load; the engine keeps ordering lazy
     (downstream window specs order explicitly) so the scan itself never
@@ -311,14 +312,14 @@ def scan_power_csv(spark: SparkSession, path: str, col_time: str = "time") -> Da
     """
     df = spark.read.csv(path, header=True, inferSchema=True)
     return (
-        df.withColumn("timestamp", F.to_timestamp(F.col(col_time)))
+        df.withColumn("timestamp", F.to_timestamp(F.col("time")))
         .withColumn("state_bin", (F.col("State") == F.lit("charging")).cast("int"))
     )
 
 
 # --- S2: host wide-CSV scan (func_aux/func_preproc.py:537-589) ----------
 
-def scan_host_csv(spark: SparkSession, path: str, state_col: str = "State") -> DataFrame:
+def scan_host_csv(spark: SparkSession, path: str) -> DataFrame:
     """Positional schema: every column left of ``State`` is an event
     counter; they are coerced to double (null on failure), ``time`` is
     excluded, and a file-order ``timestamp`` is derived.
@@ -331,11 +332,11 @@ def scan_host_csv(spark: SparkSession, path: str, state_col: str = "State") -> D
     """
     df = spark.read.csv(path, header=True)
     cols = df.columns
-    if state_col not in cols:
-        raise ValueError(f"host CSV must contain a '{state_col}' column")
-    feature_cols = [c for c in cols[: cols.index(state_col)] if c.lower() != "time"]
+    if "State" not in cols:
+        raise ValueError("host CSV must contain a 'State' column")
+    feature_cols = [c for c in cols[: cols.index("State")] if c.lower() != "time"]
     keep = [F.col(c).try_cast("double").alias(c) for c in feature_cols]
-    keep += [F.col(c) for c in cols[cols.index(state_col):]]
+    keep += [F.col(c) for c in cols[cols.index("State"):]]
     df = df.select(*keep).withColumn("__file_pos", F.monotonically_increasing_id())
     from cicevse2024_tfm_datapipeline_spark.operators.scan import global_row_number
 

@@ -1,42 +1,7 @@
-"""Explicit StructType schemas.
-
-The reference infers schemas from CSV at runtime (pandas ``read_csv``,
-``/root/reference/func_aux/func_preproc.py:129,552``); at 100 TB inference is
-a full extra scan, so the engine declares schemas up front and treats
-inference strictly as a fallback.
-
-Two schema families:
-  1. modality schemas — the reference's three input shapes (power / host /
-     network), for CSV ingestion parity (SURVEY §1.3, FIXTURES.md §A);
-  2. synthetic-table schemas — the driver's TPC-H-ish tables (FIXTURES.md §B)
-     used by the oracle-checked query surface.
-"""
+"""Names of the synthetic tables (driver-provided parquet, TESTDATA.md)
+behind the oracle-checked query surface (FIXTURES.md §B)."""
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-# --- modality schemas (FIXTURES.md §A) ---------------------------------
-
-#: power CSV: ``/root/reference/func_aux/func_preproc.py:128-136`` reads
-#: time + 3 signals + State + Attack.
-POWER_SCHEMA = T.StructType(
-    [
-        T.StructField("time", T.StringType()),  # parsed to timestamp by the scan op
-        T.StructField("current_mA", T.DoubleType()),
-        T.StructField("bus_voltage_V", T.DoubleType()),
-        T.StructField("power_mW", T.DoubleType()),
-        T.StructField("State", T.StringType()),
-        T.StructField("Attack", T.StringType()),
-    ]
-)
-
-#: network flow records carry many numeric features plus leak-prone ID
-#: columns; the scan keeps everything as string/double and the narrowing
-#: pass (operators.narrowing) prunes (reference drops at
-#: ``pipelines_network/pipeline_trainingmodels_network.py:353-416``).
-
-# --- synthetic tables (driver-provided parquet, TESTDATA.md) ------------
 
 TABLE_NAMES = (
     "region",

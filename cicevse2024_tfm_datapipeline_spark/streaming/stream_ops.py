@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: event-time watermark of the windowed aggregations below
+WATERMARK = "1 day"
+
 #: state sentinel for "no rows folded yet" in the ordering-contract columns
 _NO_TS = -(2**62)
 
@@ -66,46 +69,10 @@ def _buffer_sorted_batch(pdf_iter, ts_col: str, tiebreak_col: str):
     return pdf.sort_values([ts_col, tiebreak_col], kind="mergesort")
 
 
-def read_events_stream(spark, sf_dir: str, schema=None) -> DataFrame:
-    """File-source stream over the synthetic events parquet — used by the
-    smoke tests (one-file micro-batch; production: Kafka/EventHub).
-
-    Timestamp columns are declared as long (int64 storage) and rebuilt
-    with ``timestamp_micros`` so the event-time column is TIMESTAMP (LTZ),
-    not TIMESTAMP_NTZ — ``withWatermark`` rejects NTZ event time."""
-    import pyspark.sql.types as T
-
-    if schema is not None:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{sf_dir}")
-        )
-    # infer once from the batch reader (driver-side, footer only)
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import load_table
-
-    batch = load_table(spark, sf_dir, "events").schema
-    ts_cols = [
-        f.name for f in batch.fields if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-    ]
-    fields = [
-        T.StructField(f.name, T.LongType() if f.name in ts_cols else f.dataType, f.nullable)
-        for f in batch.fields
-    ]
-    stream = (
-        spark.readStream.schema(T.StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{sf_dir}")
-    )
-    for c in ts_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros({c})"))
-    return stream
-
-
-def tumbling_avg_stream(events: DataFrame, window_sec: int = 86400, watermark: str = "1 day") -> DataFrame:
+def tumbling_avg_stream(events: DataFrame, window_sec: int = 86400) -> DataFrame:
     """A16 streaming twin: tumbling event-time window average."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", f"{window_sec} seconds"), F.col("event_type"))
         .agg(F.avg("value").alias("avg_value"), F.count(F.lit(1)).alias("n_rows"))
         .select(
@@ -117,33 +84,14 @@ def tumbling_avg_stream(events: DataFrame, window_sec: int = 86400, watermark: s
     )
 
 
-def sliding_window_stream(
-    events: DataFrame, length_sec: int, hop_sec: int, watermark: str = "1 day"
-) -> DataFrame:
-    """W3 streaming twin: sliding event-time windows (length, hop) with
-    per-window summary features — the streaming equivalent of the batch
-    trailing-frame featurization."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", f"{length_sec} seconds", f"{hop_sec} seconds"))
-        .agg(
-            F.avg("value").alias("value_mean"),
-            F.min("value").alias("value_min"),
-            F.max("value").alias("value_max"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(F.col("window.start").alias("window_start"), "value_mean", "value_min", "value_max", "n_rows")
-    )
-
-
-def tumbling_sums_stream(events: DataFrame, window_sec: int = 86400, watermark: str = "1 day") -> DataFrame:
+def tumbling_sums_stream(events: DataFrame, window_sec: int = 86400) -> DataFrame:
     """A16 streaming twin in ORACLE-CANONICAL form: window start as epoch
     seconds (no timestamp-formatting parity risk) and sum+count instead of
     avg (the caller derives the canonicalized decimal mean — see
     plans.common.pround). Drive with complete output mode for a full,
     batch-equal result set."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", f"{window_sec} seconds"), F.col("event_type"))
         .agg(F.sum("value").alias("sum_value"), F.count(F.lit(1)).alias("n_rows"))
         .select(
@@ -155,13 +103,11 @@ def tumbling_sums_stream(events: DataFrame, window_sec: int = 86400, watermark: 
     )
 
 
-def sliding_sums_stream(
-    events: DataFrame, length_sec: int, hop_sec: int, watermark: str = "1 day"
-) -> DataFrame:
+def sliding_sums_stream(events: DataFrame, length_sec: int, hop_sec: int) -> DataFrame:
     """W3 streaming twin in oracle-canonical form (epoch-second window
     starts, sums not means)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", f"{length_sec} seconds", f"{hop_sec} seconds"))
         .agg(
             F.sum("value").alias("sum_value"),
@@ -179,10 +125,10 @@ def sliding_sums_stream(
     )
 
 
-def session_window_stream(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 day") -> DataFrame:
+def session_window_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """W6 streaming twin: session windows per user with inactivity gap."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(

@@ -83,21 +83,6 @@ def test_driver_window_contract():
     assert not bogus, f"_ROWS_ONLY_WINDOW_OK lists oracled queries: {bogus}"
 
 
-def test_rotation_plans_resolve():
-    """Names queued for future windows (_R0x_PLAN) must exist —
-    a typo would silently shrink a future certification window."""
-    from cicevse2024_tfm_datapipeline_spark import plans
-    from cicevse2024_tfm_datapipeline_spark.plans import load_all
-
-    registry = set(load_all())
-    for plan_name in ("_R06_PLAN", "_R07_PLAN", "_R08_PLAN"):
-        plan = getattr(plans, plan_name, None)
-        if plan is None:
-            continue
-        missing = [n for n in plan if n not in registry]
-        assert not missing, f"{plan_name} names not registered: {missing}"
-
-
 #: committed official driver artifacts — enumerated EXPLICITLY (not
 #: globbed) so an uncommitted or future CORRECTNESS_r0x.json in the tree
 #: cannot silently change what these meta-tests pin (r07 ADVICE item).

@@ -78,6 +78,26 @@ def test_severity_zero_is_identity(spark):
     }
 
 
+@pytest.mark.parametrize("kind", ["packet_loss", "missing_variables", "clock_offset", "drift"])
+def test_empty_window_degrades_to_empty(spark, kind):
+    """A zero-row window matrix comes back as an empty matrix (np.stack
+    raises on zero rows) and leaves its neighbours' seeded draws alone."""
+    from cicevse2024_tfm_datapipeline_spark.operators.degrade import degrade_windows
+
+    full = make_windows(spark, n=3, T=4, F_=2)
+    empty = spark.createDataFrame([(99, [])], "window_id long, matrix array<array<double>>")
+    got = {
+        r["window_id"]: r["matrix"]
+        for r in degrade_windows(full.union(empty), "matrix", "window_id", 0.5, kind, seed=7).collect()
+    }
+    want = {
+        r["window_id"]: r["matrix"]
+        for r in degrade_windows(full, "matrix", "window_id", 0.5, kind, seed=7).collect()
+    }
+    assert got.pop(99) == []
+    assert got == want
+
+
 def test_r5_permutation_preserves_multiset(spark):
     from cicevse2024_tfm_datapipeline_spark.operators.degrade import permute_feature_globally
 
